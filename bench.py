@@ -8,6 +8,10 @@ Prints ONE JSON line:
    "queries_cold": {...}, "queries_10x": {...}, "scale_10x": {...},
    "sf": ...}
 
+The 10x ratios are gated against the written claims in
+scale_claims.json (``check_scale_claims``); the result ships in the
+detail file as ``scale_claims_check``.
+
 Set SPARK_GRAFT_10X=0 to skip the 10x tier.
 """
 
@@ -242,6 +246,12 @@ HEADLINE = [
 # baseline comparison survives the detail file split.
 BASELINE_SET = HEADLINE[:19]
 
+# The base and 10x tiers each run as BASE_CHUNKS fresh-JVM children
+# (see run_child); a flagged 10x ratio gets REMEASURE_REPS more paired
+# reps before the claims gate may turn red.
+BASE_CHUNKS = 3
+REMEASURE_REPS = 3
+
 
 def _warm_session(spark, warm_dir: str) -> None:
     """Warm codegen AND the Arrow Python workers: the warmup UDF job
@@ -281,76 +291,70 @@ def _run_queries(spark, names, data_dir: str):
     return times, cold
 
 
-def run_tier_child() -> None:
-    """Child-process entry: run the comma-separated query names in
-    $SPARK_GRAFT_TIER_NAMES against $SPARK_GRAFT_TIER_DIR in a FRESH
-    JVM, write {"times", "cold"} JSON to $SPARK_GRAFT_TIER_OUT.
+def run_child(params: dict) -> None:
+    """Child-process entry (``bench.py --child JSON``): measure
+    ``params["names"]`` in a FRESH JVM and write the JSON payload to
+    ``params["out"]``. Three kinds, told apart by the parameters:
+
+    - base tier (``data_dir``): {"times", "cold"};
+    - 10x tier (``data_dir`` plus ``base_dir``): builds the 10x
+      tables from base_dir when missing, and ships the base tier
+      re-timed in this JVM as "paired_base" next to times/cold;
+    - re-measure (``remeasure`` too): tagged min-leg evidence per
+      query (see ``_remeasure``).
 
     Why children at all: in-sequence numbers inherit heap/GC state
     from the queries before them — round 3 measured up to 3x
     inflation on the 10x tier, and round 4 measured +13% drift across
     the 96-query base tier. Fresh JVMs per chunk make the shipped
     numbers reproducible in isolation (round-4 VERDICT item 3)."""
-    data_dir = os.environ["SPARK_GRAFT_TIER_DIR"]
-    out_path = os.environ["SPARK_GRAFT_TIER_OUT"]
-    names = os.environ["SPARK_GRAFT_TIER_NAMES"].split(",")
-    label = os.environ.get("SPARK_GRAFT_TIER_LABEL", "tier")
-    spark = get_spark(f"bench-{label}")
-    payload = {}
-    if label.startswith("10x"):
-        sf_dir = os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
-        )
-        ensure_10x(spark, sf_dir, data_dir)
-        # PAIRED ratio measurement: time the base tier again IN THIS
-        # JVM, seconds before the 10x timing, so the ratio's
-        # numerator and denominator share the same host state. Three
-        # idle canonical runs measured the ratio from CROSS-process
-        # base times at 18.6 / 4.48 / 0.84 for the same sub-second
-        # query — host drift between tiers an hour apart swamps the
-        # signal; pairing cancels it.
-        _warm_session(spark, sf_dir)
-        paired, _ = _run_queries(spark, names, sf_dir)
-        payload["paired_base"] = paired
-    _warm_session(spark, data_dir)
-    times, cold = _run_queries(spark, names, data_dir)
-    payload.update({"times": times, "cold": cold})
-    with open(out_path, "w") as fh:
+    names, data_dir = params["names"], params["data_dir"]
+    base_dir = params.get("base_dir")
+    spark = get_spark(f"bench-{params['label']}")
+    if base_dir:
+        ensure_10x(spark, base_dir, data_dir)
+    if params.get("remeasure"):
+        payload = _remeasure(spark, names, base_dir, data_dir)
+    else:
+        payload = {}
+        if base_dir:
+            # PAIRED ratio measurement: time the base tier again IN
+            # THIS JVM, seconds before the 10x timing, so the ratio's
+            # numerator and denominator share the same host state.
+            # Three idle canonical runs measured the ratio from
+            # CROSS-process base times at 18.6 / 4.48 / 0.84 for the
+            # same sub-second query — host drift between tiers an hour
+            # apart swamps the signal; pairing cancels it.
+            _warm_session(spark, base_dir)
+            payload["paired_base"], _ = _run_queries(spark, names, base_dir)
+        _warm_session(spark, data_dir)
+        payload["times"], payload["cold"] = _run_queries(spark, names, data_dir)
+    with open(params["out"], "w") as fh:
         json.dump(payload, fh)
 
 
-def _spawn_tier(label: str, names, data_dir: str):
-    """Run a tier chunk in a fresh child JVM; returns (times, cold)."""
+def _spawn(**params) -> dict:
+    """Run ``run_child(params)`` in a fresh child process; returns its
+    payload ({} on failure — a re-measure then falls back to the
+    shipped ratio alone)."""
     import subprocess
     import tempfile
 
-    with tempfile.NamedTemporaryFile(suffix=".json", delete=False) as tf:
-        out_path = tf.name
-    env = dict(os.environ)
-    env["SPARK_GRAFT_BENCH_STAGE"] = "tier"
-    env["SPARK_GRAFT_TIER_DIR"] = data_dir
-    env["SPARK_GRAFT_TIER_OUT"] = out_path
-    env["SPARK_GRAFT_TIER_NAMES"] = ",".join(names)
-    env["SPARK_GRAFT_TIER_LABEL"] = label
-    proc = subprocess.run(
-        [sys.executable, os.path.abspath(__file__)],
-        env=env,
-        capture_output=True,
-        text=True,
-    )
-    if proc.returncode != 0 or not os.path.exists(out_path):
-        sys.stderr.write(
-            f"tier {label} subprocess failed rc={proc.returncode}\n"
-            f"{proc.stderr[-2000:]}\n"
+    with tempfile.TemporaryDirectory() as tmp:
+        params["out"] = os.path.join(tmp, "out.json")
+        proc = subprocess.run(
+            [sys.executable, os.path.abspath(__file__), "--child", json.dumps(params)],
+            capture_output=True,
+            text=True,
         )
-        return {}, {}, {}
-    with open(out_path) as fh:
-        d = json.load(fh)
-    try:
-        os.unlink(out_path)
-    except OSError:
-        pass
-    return d["times"], d["cold"], d.get("paired_base", {})
+        if proc.returncode != 0 or not os.path.exists(params["out"]):
+            sys.stderr.write(
+                f"{params['label']} subprocess failed rc={proc.returncode}\n"
+                f"{proc.stderr[-2000:]}\n"
+            )
+            return {}
+        with open(params["out"]) as fh:
+            return json.load(fh)
 
 
 def min_leg_ratio(tbs: list[float], t10s: list[float]) -> float:
@@ -365,34 +369,22 @@ def min_leg_ratio(tbs: list[float], t10s: list[float]) -> float:
     return round(min(t10s) / max(min(tbs), 1e-3), 2)
 
 
-def run_remeasure_child() -> None:
-    """Child-process entry for the claims-gate re-measure (round-8
-    gate redesign, VERDICT r7 item 1b): for each flagged query, run
-    REPS more paired base+10x warm measurements in ONE fresh JVM and
-    write {"ratios": {name: [min-leg]}, "reps_detail": {...legs...}}.
-    The decision is min over shipped + the ratios list (round-9:
-    contention is strictly inflationary).
+def _remeasure(spark, names, base_dir: str, dir_10x: str) -> dict:
+    """Claims-gate re-measure (round-8 gate redesign, VERDICT r7 item
+    1b): REMEASURE_REPS more paired base+10x warm reps per flagged
+    query, shipped as TAGGED evidence (round-10 ADVICE) —
+    {name: {"min_leg": [ratio], "reps_detail": {"base", "tenx"}}} —
+    so an offline replay recomputes the min-leg ratio from the raw
+    legs instead of trusting a bare number whose kind it cannot
+    verify.
 
-    Round-9 continuation: the list's LAST element is the MIN-LEG
-    ratio min(t10 reps)/min(tb reps) — strictly more robust than any
-    paired ratio, because host-state contamination (GC tails, /tmp
-    writeback after the tier children) inflates one LEG at a time:
-    a paired ratio is wrong whenever EITHER leg of that rep was hit
-    (a contaminated base even deflates it, the false-green
-    direction), while min per leg approximates the clean time of
-    each side as long as ANY rep of that leg ran clean. Observed on
-    the r9 canonical run: q_dup_spans paired reps [15.81, 6.01] in
-    the post-tier window, while the same query minutes later paired
-    1.57-1.63 — per-leg minima recover the latter from mixed reps.
-    REPS default 3 (was 2), with a settle pause after the GC so the
-    kernel's post-tier writeback drains outside the timed window."""
-    names = os.environ["SPARK_GRAFT_TIER_NAMES"].split(",")
-    base_dir = os.environ["SPARK_GRAFT_TIER_DIR"]
-    dir_10x = os.environ["SPARK_GRAFT_TIER_DIR_10X"]
-    out_path = os.environ["SPARK_GRAFT_TIER_OUT"]
-    reps = int(os.environ.get("SPARK_GRAFT_REMEASURE_REPS", "3"))
-    spark = get_spark("bench-remeasure")
-    ensure_10x(spark, base_dir, dir_10x)
+    Min-leg, not paired: host-state contamination (GC tails, /tmp
+    writeback after the tier children) inflates one LEG at a time.
+    Observed on the r9 canonical run: q_dup_spans paired reps
+    [15.81, 6.01] in the post-tier window, while the same query
+    minutes later paired 1.57-1.63 — per-leg minima recover the
+    latter from mixed reps. A settle pause after the GC lets the
+    kernel's post-tier writeback drain outside the timed window."""
     _warm_session(spark, base_dir)
     legs: dict[str, tuple[list[float], list[float]]] = {
         n: ([], []) for n in names
@@ -400,7 +392,7 @@ def run_remeasure_child() -> None:
     for name in names:  # one warmup pass per dir (codegen + cache)
         QUERIES[name](spark, base_dir).count()
         QUERIES[name](spark, dir_10x).count()
-    for _ in range(reps):
+    for _ in range(REMEASURE_REPS):
         for name in names:
             spark.catalog.clearCache()
             spark._jvm.System.gc()
@@ -413,103 +405,59 @@ def run_remeasure_child() -> None:
             t10 = time.time() - t0
             legs[name][0].append(tb)
             legs[name][1].append(t10)
-    ratios = {n: [min_leg_ratio(tbs, t10s)] for n, (tbs, t10s) in legs.items()}
-    detail = {
+    return {
         n: {
-            "base": [round(b, 3) for b in tbs],
-            "tenx": [round(t, 3) for t in t10s],
+            "min_leg": [min_leg_ratio(tbs, t10s)],
+            "reps_detail": {
+                "base": [round(b, 3) for b in tbs],
+                "tenx": [round(t, 3) for t in t10s],
+            },
         }
         for n, (tbs, t10s) in legs.items()
     }
-    with open(out_path, "w") as fh:
-        json.dump({"ratios": ratios, "reps_detail": detail}, fh)
 
 
-def _spawn_remeasure(names: list[str], sf_dir: str, dir_10x: str) -> dict:
-    """Parent-side re-measure: fresh child JVM, paired reps for the
-    flagged queries. Returns {name: [ratio, ...]} ({} on failure —
-    the gate then falls back to the shipped ratio alone)."""
-    import subprocess
-    import tempfile
+def decided_ratio(shipped: float, evidence) -> tuple[float, list[float]]:
+    """The 10x ratio a claim is judged on, and the re-measure reps
+    behind it: ``shipped`` lowered by ``evidence`` (one entry of
+    ``scale_claims_check.remeasured``, or None). The only code that
+    reads the evidence format, which is TAGGED (round-10 ADVICE):
 
-    with tempfile.NamedTemporaryFile(suffix=".json", delete=False) as tf:
-        out_path = tf.name
-    env = dict(os.environ)
-    env["SPARK_GRAFT_BENCH_STAGE"] = "remeasure"
-    env["SPARK_GRAFT_TIER_NAMES"] = ",".join(names)
-    env["SPARK_GRAFT_TIER_DIR"] = sf_dir
-    env["SPARK_GRAFT_TIER_DIR_10X"] = dir_10x
-    env["SPARK_GRAFT_TIER_OUT"] = out_path
-    proc = subprocess.run(
-        [sys.executable, os.path.abspath(__file__)],
-        env=env,
-        capture_output=True,
-        text=True,
-    )
-    if proc.returncode != 0 or not os.path.exists(out_path):
-        sys.stderr.write(
-            f"remeasure subprocess failed rc={proc.returncode}\n"
-            f"{proc.stderr[-2000:]}\n"
-        )
-        return {}
-    with open(out_path) as fh:
-        d = json.load(fh)
-    try:
-        os.unlink(out_path)
-    except OSError:
-        pass
-    # ship TAGGED evidence (round-10 ADVICE): the raw legs ride along
-    # so an offline replay recomputes the min-leg ratio itself instead
-    # of trusting a bare number whose kind it cannot verify.
-    detail = d.get("reps_detail", {})
-    return {
-        n: {"min_leg": v, "reps_detail": detail.get(n, {})}
-        for n, v in d.get("ratios", {}).items()
-    }
+    - a dict {"min_leg": [...], "reps_detail": {...}} is the
+      ``_remeasure`` output; the min-leg ratio is recomputed from the
+      raw legs when present (min per LEG only removes inflation, so
+      pooling it into min() with shipped is safe — a true regression
+      is slow in every 10x leg);
+    - an untagged plain list is legacy PAIRED per-rep ratios (r8-era
+      artifacts): a contaminated BASE leg DEFLATES a paired ratio, so
+      min() over them has a false-green direction — they enter as
+      their MEDIAN instead (conservative; a replayed legacy artifact
+      cannot be re-measured)."""
+    if isinstance(evidence, dict):
+        det = evidence.get("reps_detail") or {}
+        if det.get("base") and det.get("tenx"):
+            reps = [min_leg_ratio(det["base"], det["tenx"])]
+        else:
+            reps = [float(x) for x in evidence.get("min_leg") or []]
+        return round(min([shipped] + reps), 2), reps
+    reps = [float(x) for x in evidence or []]
+    if not reps:
+        return round(shipped, 2), reps
+    return round(min(shipped, statistics.median(reps)), 2), reps
 
 
-def parse_scale_claims(notes_path: str | None = None) -> dict[str, float]:
-    """Parse SCALE_NOTES.md's 'Machine-checked 10× ratio claims'
-    table: rows '| q_name | 2.2 | why |' -> {q_name: 2.2}. The table
-    is the single written source of truth for expected 10x ratios."""
-    import re
-
-    if notes_path is None:
-        notes_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "SCALE_NOTES.md"
-        )
-    claims: dict[str, float] = {}
-    in_table = False
-    with open(notes_path) as fh:
-        for line in fh:
-            if "Machine-checked 10" in line:
-                in_table = True
-                continue
-            if in_table:
-                m = re.match(
-                    r"\|\s*(q_\w+)\s*\|\s*([0-9.]+)\s*\|", line
-                )
-                if m:
-                    claims[m.group(1)] = float(m.group(2))
-                elif claims and not line.strip().startswith("|"):
-                    break  # table ended
-    return claims
+CLAIMS_PATH = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "scale_claims.json"
+)
 
 
-def parse_claims_cores(notes_path: str | None = None) -> int | None:
-    """The core count the claims table's ratios were measured at —
-    SCALE_NOTES.md states it once as 'claims_cores: N' next to the
-    table (round-11, VERDICT r10 item 9). None when absent (legacy
-    notes): bounds then never scale."""
-    import re
-
-    if notes_path is None:
-        notes_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "SCALE_NOTES.md"
-        )
-    with open(notes_path) as fh:
-        m = re.search(r"claims_cores:\s*(\d+)", fh.read())
-    return int(m.group(1)) if m else None
+def load_scale_claims(path: str = CLAIMS_PATH) -> dict:
+    """The written 10x-ratio claims, the single source of truth for
+    expected 10x ratios: {"claims_cores": N, "claims": {query:
+    {"ratio": r, "why": "..."}}}. claims_cores is the core count the
+    ratios were measured at (round-11, VERDICT r10 item 9)."""
+    with open(path) as fh:
+        return json.load(fh)
 
 
 UNCLAIMED_MIN_BASE_SEC = 0.75
@@ -523,15 +471,14 @@ CLAIM_TOL = 2.0
 UNCLAIMED_BOUND = 2.5
 
 
-
 def check_scale_claims(
     scale_10x: dict[str, float],
     base_times: dict[str, float] | None = None,
     remeasure=None,
-    remeasured: dict[str, list[float]] | None = None,
+    remeasured: dict | None = None,
     cpus: int | None = None,
 ) -> dict:
-    """Bench <-> SCALE_NOTES consistency, round-8 structural redesign
+    """Bench <-> scale_claims.json consistency, round-8 structural redesign
     (VERDICT r7 item 1 — the gate itself was the defect three rounds
     running, each time a different false-red mode):
 
@@ -542,7 +489,7 @@ def check_scale_claims(
         suite (r7 shipped 4 improvement-direction reds after the AQE
         grouped-map fix outran its claims).
     (b) RE-MEASURE before declaring red: each flagged query gets
-        REPS (default 3) more paired base+10x reps in one fresh
+        REMEASURE_REPS (3) more paired base+10x reps in one fresh
         child JVM (``remeasure`` callable, bench-time), distilled to
         the MIN-LEG ratio min(t10)/min(tb), and the MIN of
         shipped + that evidence decides (round-9 fix, VERDICT r8 item 1:
@@ -557,13 +504,8 @@ def check_scale_claims(
         slow. The reps ship in the artifact under ``remeasured`` so
         tests/test_scale_claims.py replays the identical decision
         offline (pass them back via the ``remeasured`` parameter).
-        Round-10 ADVICE hardening: evidence is format-tagged — only
-        tagged min-leg evidence (dict with min_leg/reps_detail,
-        min-leg recomputed from the legs when present) may pool into
-        the min; an untagged plain list is legacy r8-era PAIRED
-        ratios whose base-leg contamination deflates them, so they
-        enter as their MEDIAN (replayed legacy artifacts judge
-        conservatively — they cannot be re-measured).
+        ``decided_ratio`` reads the format-tagged evidence (round-10
+        ADVICE: untagged legacy lists enter as their MEDIAN).
     (c) Sub-second-base queries are re-measured like everything else
         but judged against looser bounds (claim x 3 / backstop 5.0)
         instead of the r7 blanket exemption — a real sub-second
@@ -573,7 +515,8 @@ def check_scale_claims(
     With no re-measure evidence available (no callable, no stored
     reps) a flagged query confirms red on the shipped ratio alone —
     conservative, and keeps the pure-unit path deterministic."""
-    claims = parse_scale_claims()
+    doc = load_scale_claims()
+    claims = {q: c["ratio"] for q, c in doc["claims"].items()}
     base_times = base_times or {}
     remeasured = dict(remeasured or {})
     # Core-aware bounds (round-11, VERDICT r10 item 9: the driver's
@@ -589,7 +532,7 @@ def check_scale_claims(
     # the caller states its core count (bench-time, or the pytest
     # replay reading the artifact's `cpus`) — legacy callers/
     # artifacts keep the exact old behavior.
-    claims_cores = parse_claims_cores()
+    claims_cores = doc.get("claims_cores")
     core_factor = 1.0
     if cpus and claims_cores and cpus < claims_cores:
         core_factor = min(claims_cores / cpus, 2.0)
@@ -624,33 +567,7 @@ def check_scale_claims(
     unclaimed = []
     cleared = []
     for name, shipped, c in flagged:
-        ev = remeasured.get(name)
-        # Evidence handling is FORMAT-TAGGED (round-10 ADVICE —
-        # bench.py:check_scale_claims pooled whatever list shipped):
-        #  * dict {"min_leg": [...], "reps_detail": {...}} is the
-        #    tagged child output; recompute the min-leg ratio from
-        #    the raw legs when present (min per LEG only removes
-        #    inflation, so pooling these into min() with shipped is
-        #    safe — a true regression is slow in every 10x leg);
-        #  * an untagged plain list is legacy PAIRED per-rep ratios
-        #    (r8-era artifacts): a contaminated BASE leg DEFLATES a
-        #    paired ratio, so min() over them has a false-green
-        #    direction — use their MEDIAN instead (conservative; a
-        #    replayed legacy artifact cannot be re-measured).
-        if isinstance(ev, dict):
-            det = ev.get("reps_detail") or {}
-            if det.get("base") and det.get("tenx"):
-                reps = [min_leg_ratio(det["base"], det["tenx"])]
-            else:
-                reps = [float(x) for x in ev.get("min_leg") or []]
-            decided = round(min([shipped] + reps), 2)
-        else:
-            reps = [float(x) for x in ev or []]
-            decided = (
-                round(min(shipped, statistics.median(reps)), 2)
-                if reps
-                else round(shipped, 2)
-            )
+        decided, reps = decided_ratio(shipped, remeasured.get(name))
         bound = _bounds(name, c)
         entry = {
             "query": name,
@@ -679,7 +596,7 @@ def check_scale_claims(
     }
     if not result["ok"]:
         sys.stderr.write(
-            f"SCALE_NOTES claim check FAILED: {json.dumps(result)}\n"
+            f"scale claims check FAILED: {json.dumps(result)}\n"
         )
     return result
 
@@ -694,15 +611,14 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
 
-    n_chunks = max(1, int(os.environ.get("SPARK_GRAFT_BASE_CHUNKS", "3")))
-    size = (len(HEADLINE) + n_chunks - 1) // n_chunks
+    size = (len(HEADLINE) + BASE_CHUNKS - 1) // BASE_CHUNKS
+    chunks = [HEADLINE[i : i + size] for i in range(0, len(HEADLINE), size)]
     times: dict[str, float] = {}
     cold: dict[str, float] = {}
-    for i in range(0, len(HEADLINE), size):
-        chunk = HEADLINE[i : i + size]
-        t, c, _ = _spawn_tier(f"base{i // size}", chunk, sf_dir)
-        times.update(t)
-        cold.update(c)
+    for i, chunk in enumerate(chunks):
+        d = _spawn(label=f"base{i}", names=chunk, data_dir=sf_dir)
+        times.update(d.get("times", {}))
+        cold.update(d.get("cold", {}))
     total = sum(times.values())
 
     times_10x: dict[str, float] = {}
@@ -717,16 +633,17 @@ def main() -> None:
         # drift window, else late-suite ratios divide a drift-prone
         # numerator by a drift-bounded denominator (round-5 ADVICE)
         paired_base: dict[str, float] = {}
-        for i in range(0, len(HEADLINE), size):
-            chunk = HEADLINE[i : i + size]
-            t10, _, pb = _spawn_tier(f"10x{i // size}", chunk, dir_10x)
-            times_10x.update(t10)
-            paired_base.update(pb)
+        for i, chunk in enumerate(chunks):
+            d = _spawn(
+                label=f"10x{i}", names=chunk, data_dir=dir_10x, base_dir=sf_dir
+            )
+            times_10x.update(d.get("times", {}))
+            paired_base.update(d.get("paired_base", {}))
         for name, t in times_10x.items():
             # wall-clock ratio for 10x the data, from the PAIRED
             # same-JVM base measurement (falls back to the base tier
             # if absent); > ~2.5 needs a written claim in
-            # SCALE_NOTES.md's machine-checked table
+            # scale_claims.json
             den = paired_base.get(name, times.get(name, 0))
             scale_10x[name] = round(t / max(den, 1e-3), 2)
 
@@ -736,8 +653,12 @@ def main() -> None:
     # skipped automatically when the 10x tier is off.
     remeasure_fn = None
     if scale_10x:
-        remeasure_fn = lambda names: _spawn_remeasure(  # noqa: E731
-            names, sf_dir, dir_10x
+        remeasure_fn = lambda names: _spawn(  # noqa: E731
+            label="remeasure",
+            names=names,
+            data_dir=dir_10x,
+            base_dir=sf_dir,
+            remeasure=True,
         )
     from pipeline_dataengineer_spark.session import default_parallelism
 
@@ -803,10 +724,7 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    stage = os.environ.get("SPARK_GRAFT_BENCH_STAGE")
-    if stage == "tier":
-        run_tier_child()
-    elif stage == "remeasure":
-        run_remeasure_child()
+    if sys.argv[1:2] == ["--child"]:
+        run_child(json.loads(sys.argv[2]))
     else:
         main()

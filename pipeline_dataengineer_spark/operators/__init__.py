@@ -4,7 +4,6 @@ from pipeline_dataengineer_spark.operators.dedup import (
     dedup_exact,
     dedup_keep_first,
     dedup_last_wins,
-    minhash_signature,
     minhash_lsh_near_duplicates,
     simhash64,
     ngram_jaccard_pairs,
@@ -23,7 +22,6 @@ __all__ = [
     "dedup_exact",
     "dedup_keep_first",
     "dedup_last_wins",
-    "minhash_signature",
     "minhash_lsh_near_duplicates",
     "simhash64",
     "ngram_jaccard_pairs",

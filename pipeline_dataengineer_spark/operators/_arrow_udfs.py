@@ -65,14 +65,21 @@ def make_winnow_fingerprint_udf(kgram, window):
 
 
 def make_shingle_minhash_arrow_fn(mults_l, adds_l, shingle_n, num_hashes, bands):
-    """mapInArrow variant of ``make_shingle_minhash_udf``: identical
-    per-document numpy kernel, but batches flow as Arrow RecordBatches
-    with NO pandas layer — building the result as ``pa.array`` of
-    int64 ndarrays skips the Series-of-objects conversion the
-    pandas_udf return path pays (measured at sf0.1, 10k docs:
-    signature stage write 1.3 s → 0.95 s warm, 4.3 s → 1.1 s cold).
-    Expects input batches with columns (__id, __text); yields
-    (__id, __sh, __bands)."""
+    """text → (__sh: distinct shingle codes, __bands: LSH band hashes)
+    as a mapInArrow function. Expects input batches with columns
+    (__id, __text); yields (__id, __sh, __bands).
+
+    Shingling, minhashing and banding all happen in numpy on the byte
+    level: for shingle_n ≤ 8 each k-gram packs injectively into an
+    int64 (base-256 positional code), so no string hashing is needed
+    at all. The JVM higher-order-function formulation (substr
+    transform + xxhash64 per shingle) is interpreted per element and
+    measured ~6s/10k docs; this path is ~0.5s. Batches flow as Arrow
+    RecordBatches with NO pandas layer — building the result as
+    ``pa.array`` of int64 ndarrays skips the Series-of-objects
+    conversion a pandas_udf return path pays (measured at sf0.1, 10k
+    docs: signature stage write 1.3 s → 0.95 s warm, 4.3 s → 1.1 s
+    cold)."""
     import pyarrow as pa
 
     if shingle_n > 8:
@@ -94,6 +101,8 @@ def make_shingle_minhash_arrow_fn(mults_l, adds_l, shingle_n, num_hashes, bands)
                     band_out.append(None)
                     continue
                 raw = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
+                # ASCII lowercase (parity with lower(); non-ASCII
+                # bytes pass through)
                 b = np.where((raw >= 65) & (raw <= 90), raw + 32, raw)
                 if b.size < shingle_n:
                     b = np.pad(b, (0, shingle_n - b.size))
@@ -101,6 +110,9 @@ def make_shingle_minhash_arrow_fn(mults_l, adds_l, shingle_n, num_hashes, bands)
                 codes = np.unique(win.astype(np.int64) @ powers)
                 sh_out.append(codes)
                 base = codes % (1 << 31)
+                # mod a Mersenne prime: without it a*x + b is monotonic
+                # in x, every permutation picks the same min shingle and
+                # the signature degenerates to r=1
                 sig = ((base[:, None] * mults + adds) % prime).min(axis=0)
                 band_arr = np.empty(bands, dtype=np.int64)
                 for bi in range(bands):
@@ -119,96 +131,6 @@ def make_shingle_minhash_arrow_fn(mults_l, adds_l, shingle_n, num_hashes, bands)
             )
 
     return fn
-
-
-def make_shingle_minhash_udf(mults_l, adds_l, shingle_n, num_hashes, bands):
-    """text → {sh: array<long> distinct shingle codes,
-               bands: array<long> LSH band hashes} — fully vectorized.
-
-    Shingling, minhashing and banding all happen in numpy on the byte
-    level: for shingle_n ≤ 8 each k-gram packs injectively into an
-    int64 (base-256 positional code), so no string hashing is needed
-    at all. The JVM higher-order-function formulation (substr
-    transform + xxhash64 per shingle) is interpreted per element and
-    measured ~6s/10k docs; this path is ~0.5s.
-    """
-    if shingle_n > 8:
-        raise ValueError("packed shingle codes require shingle_n <= 8")
-    mults = np.asarray(mults_l, dtype=np.int64)
-    adds = np.asarray(adds_l, dtype=np.int64)
-    prime = np.int64((1 << 31) - 1)
-    r = num_hashes // bands
-    powers = (np.int64(256) ** np.arange(shingle_n)).astype(np.int64)
-
-    schema = T.StructType(
-        [
-            T.StructField("sh", T.ArrayType(T.LongType()), True),
-            T.StructField("bands", T.ArrayType(T.LongType()), True),
-        ]
-    )
-
-    @F.pandas_udf(schema)
-    def shingle_minhash(texts: pd.Series) -> pd.DataFrame:
-        sh_out, band_out = [], []
-        for text in texts:
-            if text is None:
-                sh_out.append(None)
-                band_out.append(None)
-                continue
-            raw = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-            # ASCII lowercase (parity with lower(); non-ASCII bytes pass through)
-            b = np.where((raw >= 65) & (raw <= 90), raw + 32, raw)
-            if b.size < shingle_n:
-                b = np.pad(b, (0, shingle_n - b.size))
-            win = np.lib.stride_tricks.sliding_window_view(b, shingle_n)
-            codes = np.unique(win.astype(np.int64) @ powers)
-            # keep numpy arrays (NOT .tolist()): Arrow converts an
-            # int64 ndarray per element-buffer memcpy, while a Python
-            # list converts object-by-object (measured ~2s/10k docs
-            # just in the return path).
-            sh_out.append(codes)
-            base = codes % (1 << 31)
-            sig = ((base[:, None] * mults + adds) % prime).min(axis=0)
-            band_arr = np.empty(bands, dtype=np.int64)
-            for bi in range(bands):
-                digest = hashlib.blake2b(
-                    sig[bi * r : (bi + 1) * r].tobytes(), digest_size=8
-                ).digest()
-                band_arr[bi] = int.from_bytes(digest, "little", signed=True)
-            band_out.append(band_arr)
-        return pd.DataFrame({"sh": sh_out, "bands": band_out})
-
-    return shingle_minhash
-
-
-def make_minhash_band_hash_udf(mults_l, adds_l, num_hashes, bands):
-    """Minhash permutation + per-band hashing in numpy (see
-    dedup.minhash_band_hashes_arrow for rationale)."""
-    mults = np.asarray(mults_l, dtype=np.int64)
-    adds = np.asarray(adds_l, dtype=np.int64)
-    prime = np.int64((1 << 31) - 1)
-    r = num_hashes // bands
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def band_hash(base: pd.Series) -> pd.Series:
-        out = []
-        for hashes in base:
-            h = np.asarray(hashes, dtype=np.int64) % (1 << 31)
-            if h.size == 0:
-                sig = np.zeros(num_hashes, dtype=np.int64)
-            else:
-                # (S, num_hashes) permuted values -> column-wise min
-                sig = ((h[:, None] * mults + adds) % prime).min(axis=0)
-            bands_out = []
-            for b in range(bands):
-                digest = hashlib.blake2b(
-                    sig[b * r : (b + 1) * r].tobytes(), digest_size=8
-                ).digest()
-                bands_out.append(int.from_bytes(digest, "little", signed=True))
-            out.append(bands_out)
-        return pd.Series(out)
-
-    return band_hash
 
 
 def demean_group(pdf: pd.DataFrame) -> pd.DataFrame:

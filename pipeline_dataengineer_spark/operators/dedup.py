@@ -90,82 +90,6 @@ def _permutation_constants(num_hashes: int) -> tuple[list[int], list[int]]:
     return mults, adds
 
 
-def minhash_signature(col: Column | str, num_hashes: int = 64, shingle_n: int = 5) -> Column:
-    """MinHash signature as array<bigint> of length `num_hashes`.
-
-    Each shingle is string-hashed ONCE (xxhash64); the `num_hashes`
-    signature slots come from cheap integer permutations a_i*h + b_i
-    (universal-hashing family; Java long arithmetic wraps, which is
-    exactly what we want). The naive per-seed re-hash of the shingle
-    strings is ~60× more string hashing and measured 5× slower
-    end-to-end at sf0.1.
-    """
-    return minhash_signature_from_shingles(shingles(col, shingle_n), num_hashes)
-
-
-def minhash_signature_from_shingles(sh: Column, num_hashes: int) -> Column:
-    """MinHash over an existing shingle-array column (see
-    minhash_signature)."""
-    base = F.transform(sh, lambda s: F.pmod(F.xxhash64(s), F.lit(1 << 31)))
-    mults, adds = _permutation_constants(num_hashes)
-    mult_arr = F.array(*[F.lit(m).cast("long") for m in mults])
-    add_arr = F.array(*[F.lit(a).cast("long") for a in adds])
-    # One pass over the shingle hashes carrying the running minima for
-    # all permutations at once. The mod by a Mersenne prime is
-    # essential: without it a_i*x + b_i is MONOTONIC in x, every
-    # "permutation" picks the same min shingle, and the signature
-    # degenerates to r=1 (measured: candidate pairs explode ~100×).
-    prime = (1 << 31) - 1
-    max_long = (1 << 63) - 1
-    init = F.array_repeat(F.lit(max_long).cast("long"), num_hashes)
-    idx = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-    return F.aggregate(
-        base,
-        init,
-        lambda acc, h: F.zip_with(
-            acc,
-            idx,
-            lambda a, i: F.least(
-                a,
-                F.pmod(
-                    h * F.element_at(mult_arr, i + 1) + F.element_at(add_arr, i + 1),
-                    F.lit(prime),
-                ),
-            ),
-        ),
-    )
-
-
-def minhash_band_hashes_arrow(num_hashes: int, bands: int):
-    """Arrow-vectorized (pandas UDF) minhash + band hashing.
-
-    Takes the base shingle-hash array column (array<long>, one xxhash64
-    per distinct shingle, JVM-side) and returns `bands` band-hash longs
-    per row. The permutation/min/band pipeline runs in numpy: the pure
-    higher-order-function formulation is interpreted per element by
-    Spark (no codegen for lambda expressions) and measured ~20×
-    slower at 10k docs; this is the sanctioned Arrow fallback.
-    """
-    from pipeline_dataengineer_spark.operators._arrow_udfs import (
-        make_minhash_band_hash_udf,
-    )
-
-    mults, adds = _permutation_constants(num_hashes)
-    return make_minhash_band_hash_udf(mults, adds, num_hashes, bands)
-
-
-def lsh_band_hashes(sig_col: Column | str, num_hashes: int, bands: int) -> Column:
-    """Hash each of `bands` contiguous signature bands to one long.
-    Takes a *materialized* signature column — never inline the
-    signature expression here or it is recomputed once per band."""
-    sig = F.col(sig_col) if isinstance(sig_col, str) else sig_col
-    r = num_hashes // bands
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.xxhash64(F.slice(sig, b * r + 1, r).cast("string")),
-    )
-
-
 def minhash_signatures(
     df: DataFrame,
     id_col: str,

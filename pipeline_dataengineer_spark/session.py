@@ -27,7 +27,6 @@ def default_parallelism() -> int:
 def get_spark(
     app_name: str = "pipeline-dataengineer-spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     **extra_conf: str,
 ) -> SparkSession:
     """Build (or reuse) a tuned SparkSession.
@@ -41,7 +40,7 @@ def get_spark(
     # the AQE initial count (kept for A/B experiments; round-10's
     # sf10 spot tier used it to prove the spill diagnosis).
     env_parts = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "0"))
-    shuffle_partitions = shuffle_partitions or env_parts or cpus
+    shuffle_partitions = env_parts or cpus
     # Input-aware shuffle sizing (round-11, guide §2.2/§5 — VERDICT
     # r10 item 3): AQE coalescing can MERGE small partitions but can
     # never SPLIT big ones, so the cores-sized static count silently
@@ -93,23 +92,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def tune_for_scale(spark: SparkSession, target_rows: int | None = None) -> None:
-    """Re-size shuffle partitions for a known workload size.
-
-    Rule of thumb: aim for 64-256 MB per shuffle partition. With AQE's
-    coalescing enabled the static number only needs to be an upper
-    bound, so err high for big inputs.
-    """
-    if target_rows is not None:
-        # ~100 bytes/row heuristic, 128 MB per partition target.
-        parts = max(default_parallelism(), target_rows * 100 // (128 << 20))
-        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-        # AQE plans from the INITIAL count (get_spark's input-aware
-        # default); raise it too so a known-large workload cannot be
-        # capped below its own size estimate.
-        spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            str(max(parts, 8 * default_parallelism(), 256)),
-        )

@@ -1,8 +1,8 @@
-"""Bench <-> SCALE_NOTES consistency gate (round-4 VERDICT item 2;
-structurally redesigned round 8 after three consecutive false-red
+"""Bench <-> scale_claims.json consistency gate (round-4 VERDICT item
+2; structurally redesigned round 8 after three consecutive false-red
 rounds — VERDICT r7 item 1): the shipped BENCH_DETAIL.json scale_10x
-ratios must agree with the machine-checked claims table in
-SCALE_NOTES.md under the asymmetric + re-measured rule:
+ratios must agree with the written claims in scale_claims.json under
+the asymmetric + re-measured rule:
 
   (a) a claim only fails when the ratio ships SLOWER than claim x 2
       (improvements are reported, never red);
@@ -34,7 +34,10 @@ def _load():
     import sys
 
     sys.path.insert(0, REPO)
-    from bench import check_scale_claims, parse_scale_claims
+    from bench import check_scale_claims, load_scale_claims
+
+    def parse_scale_claims():
+        return {q: c["ratio"] for q, c in load_scale_claims()["claims"].items()}
 
     return parse_scale_claims, check_scale_claims
 
@@ -48,19 +51,15 @@ def test_claims_table_parses():
 
 
 def test_parser_stops_at_first_table():
-    """The claims parser must ingest ONLY the 'Machine-checked 10x'
-    table — SCALE_NOTES gained a round-10 sf10 spot-tier table whose
-    rows also match '| q_name | number |' (second column is an sf1
-    leg time, NOT a 10x claim); the parser's break-at-first-table-end
-    is what keeps those rows out of the gate. Pin it: the sf10
-    section's q_tpch_q21_shape row (measured 19.69 at sf10) is
-    unclaimed, and no parsed claim carries the sf10 numbers."""
+    """The claims loader must yield ONLY the 10x claims: the sf10 spot
+    tier's q_tpch_q21_shape (measured 19.69 at sf10) is unclaimed, and
+    q_minhash_neardup keeps its 10x claim (2.0), never the sf10 spot
+    tier's sf1-leg time (6.05)."""
     parse_scale_claims, _ = _load()
     claims = parse_scale_claims()
-    # q21 appears only in the sf10 table; it must not become a claim
+    # q21 was only ever measured by the sf10 spot tier; it is no claim
     assert "q_tpch_q21_shape" not in claims
-    # minhash is in BOTH tables: the claim (2.0) must win, never the
-    # sf10 section's sf1-leg column (6.05)
+    # minhash: the 10x claim (2.0) wins, never the sf10 sf1-leg time
     assert claims.get("q_minhash_neardup") == 2.0
 
 
@@ -257,7 +256,10 @@ def test_core_aware_bounds_scale_for_low_core_artifacts():
     import sys
 
     sys.path.insert(0, REPO)
-    from bench import parse_claims_cores
+    from bench import load_scale_claims
+
+    def parse_claims_cores():
+        return load_scale_claims()["claims_cores"]
 
     _, check_scale_claims = _load()
     assert parse_claims_cores() == 32
@@ -352,3 +354,62 @@ def test_min_leg_ratio_resists_base_leg_deflation():
     # was wrong but each leg has one clean rep
     tbs2, t10s2 = [2.0, 9.5, 2.7], [19.0, 14.9, 5.9]  # true ~2.9x
     assert min_leg_ratio(tbs2, t10s2) == 2.95
+
+
+def test_sync_tool_decides_tagged_evidence(tmp_path, monkeypatch):
+    """tools/sync_scale_claims.py judges each ratio with the gate's
+    own bench.decided_ratio, so the tagged {"min_leg", "reps_detail"}
+    evidence bench.py has shipped since round 9 syncs instead of
+    crashing (it used to take min() over the dict's keys). Runs the
+    sync policy on a temp copy of the claims file, with an artifact
+    holding the round-10 8-core run's q_dup_spans evidence."""
+    import importlib.util
+    import shutil
+
+    spec = importlib.util.spec_from_file_location(
+        "sync_scale_claims", os.path.join(REPO, "tools", "sync_scale_claims.py")
+    )
+    sync = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(sync)
+    claims_path = tmp_path / "scale_claims.json"
+    shutil.copy(os.path.join(REPO, "scale_claims.json"), claims_path)
+    monkeypatch.setattr(sync, "CLAIMS_PATH", str(claims_path))
+    artifact = tmp_path / "bench_detail.json"
+    artifact.write_text(json.dumps({
+        "scale_10x": {
+            "q_dup_spans": 5.74,
+            "q_interval_join_full": 5.0,
+            "q_tfidf": 1.2,
+            "q_fake_new": 3.1,
+        },
+        "scale_claims_check": {"remeasured": {
+            "q_dup_spans": {
+                "min_leg": [4.18],
+                "reps_detail": {
+                    "base": [4.734, 3.563, 2.861],
+                    "tenx": [22.092, 13.103, 11.952],
+                },
+            },
+            "q_interval_join_full": {
+                "min_leg": [9.9],
+                "reps_detail": {"base": [1.0, 1.2], "tenx": [2.5, 2.7]},
+            },
+            "q_fake_new": {
+                "min_leg": [2.6],
+                "reps_detail": {"base": [1.0, 1.1], "tenx": [2.6, 2.8]},
+            },
+        }},
+    }))
+    assert sync.main([str(artifact)]) == 0
+    after = json.loads(claims_path.read_text())
+    claims = after["claims"]
+    # decided 4.18 from the legs: an upward move is never re-anchored
+    assert claims["q_dup_spans"]["ratio"] == 1.65
+    # decided 2.5 from the legs (shipped 5.0): re-anchored down from 4.5
+    assert claims["q_interval_join_full"]["ratio"] == 2.5
+    assert "[re-anchored" in claims["q_interval_join_full"]["why"]
+    # no evidence, shipped 1.2 < 1.6: the stale row is dropped
+    assert "q_tfidf" not in claims
+    # unclaimed, decided 2.6 > 2.0: a row is added at the decided ratio
+    assert claims["q_fake_new"]["ratio"] == 2.6
+    assert after["claims_cores"] == 32

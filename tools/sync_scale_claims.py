@@ -1,21 +1,21 @@
-"""Regenerate SCALE_NOTES.md's machine-checked 10x-ratio claims table
-from a measured BENCH_DETAIL.json artifact (round-8 VERDICT item 1c —
-the same cure sync_readme_counts.py applied to count drift: claims
-must FOLLOW artifacts via a tool, not hand-edited prose that goes
-stale whenever the engine gets faster).
+"""Regenerate scale_claims.json, the written 10x-ratio claims the
+bench gate checks, from a measured BENCH_DETAIL.json artifact
+(round-8 VERDICT item 1c — the same cure sync_readme_counts.py applied
+to count drift: claims must FOLLOW artifacts via a tool, not hand
+edits that go stale whenever the engine gets faster).
 
-Policy, applied to each headline query's EFFECTIVE ratio (MIN of
-the artifact's shipped scale_10x value and any stored re-measure
-reps — the same statistic the gate decides on since round 9:
-contention only inflates, so the smallest observation is cleanest):
+Policy, applied to each headline query's EFFECTIVE ratio — the ratio
+the gate decides on, ``bench.decided_ratio`` of the artifact's shipped
+scale_10x value and its stored re-measure evidence (contention only
+inflates, so the smallest clean observation wins):
 
 - effective > 2.0  -> the query needs a claim row (margin under the
   gate's 2.5 unclaimed bound); a new row's claim is the effective
   ratio, its why comes from WHYS (or a generic measured-at line).
-- existing row     -> re-anchor the claim to the effective ratio
-  when they disagree by more than 1.5x in either direction (small
-  wobble doesn't churn the table); the original why is preserved
-  with a dated re-anchor note.
+- existing row     -> re-anchor the claim DOWN to the effective ratio
+  when the claim is more than 1.5x above it (small wobble doesn't
+  churn the claims); the original why is preserved with a dated
+  re-anchor note.
 - effective < 1.6  -> an existing row is DROPPED: the query no
   longer needs a claim and a stale high claim is dead weight.
 
@@ -25,6 +25,7 @@ Usage:
 
 from __future__ import annotations
 
+import argparse
 import datetime as dt
 import json
 import os
@@ -32,7 +33,9 @@ import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-NOTES = os.path.join(REPO, "SCALE_NOTES.md")
+sys.path.insert(0, REPO)
+
+from bench import CLAIMS_PATH, decided_ratio, load_scale_claims  # noqa: E402
 
 # why-text for queries likely to cross the claim threshold; keyed by
 # query name. Everything else gets the generic measured-at line.
@@ -57,97 +60,75 @@ WHYS = {
 GENERIC_WHY = "linear-in-input plan; claim set from the paired 10x tier"
 
 
-
-def parse_table(text: str):
-    """Return (start_idx, end_idx, rows) where rows is
-    [(query, claim, why)] and text[start:end] spans the table's data
-    lines (after the '|---|' separator)."""
-    m = re.search(r"## Machine-checked 10. ratio claims", text)
-    if not m:
-        raise SystemExit("claims header not found in SCALE_NOTES.md")
-    sep = re.compile(r"^\|---", re.M)
-    sep_m = sep.search(text, m.end())
-    if not sep_m:
-        raise SystemExit("claims table separator not found")
-    start = text.index("\n", sep_m.start()) + 1
-    rows = []
-    pos = start
-    row_re = re.compile(r"^\|\s*(q_\w+)\s*\|\s*([0-9.]+)\s*\|\s*(.*?)\s*\|?\s*$")
-    for line in text[start:].splitlines(keepends=True):
-        mm = row_re.match(line.rstrip("\n"))
-        if not mm:
-            break
-        rows.append((mm.group(1), float(mm.group(2)), mm.group(3)))
-        pos += len(line)
-    return start, pos, rows
-
-
-def main() -> int:
-    args = [a for a in sys.argv[1:] if a != "--dry-run"]
-    dry = "--dry-run" in sys.argv[1:]
-    artifact_path = args[0] if args else os.path.join(REPO, "BENCH_DETAIL.json")
-    detail = json.load(open(artifact_path))
-    scale = detail.get("scale_10x") or {}
-    if not scale:
-        raise SystemExit(f"{artifact_path} has no scale_10x tier")
+def sync(claims: dict, detail: dict, stamp: dt.date) -> list[str]:
+    """Apply the policy to ``claims`` ({query: {"ratio", "why"}}) in
+    place from the ``detail`` artifact; returns the change log."""
     remeasured = (detail.get("scale_claims_check") or {}).get(
         "remeasured"
     ) or {}
     effective = {
-        q: round(min([r] + list(remeasured.get(q) or [])), 2)
-        for q, r in scale.items()
+        q: decided_ratio(r, remeasured.get(q))[0]
+        for q, r in detail["scale_10x"].items()
     }
-    stamp = dt.date.fromtimestamp(os.path.getmtime(artifact_path))
-
-    text = open(NOTES).read()
-    start, end, rows = parse_table(text)
-    existing = {q: (c, why) for q, c, why in rows}
-
-    out_rows = []
     changes = []
-    for q, c, why in rows:
+    for q, row in list(claims.items()):
         eff = effective.get(q)
         if eff is None:
-            out_rows.append((q, c, why))  # not in this artifact's set
-            continue
+            continue  # not in this artifact's set
+        c = row["ratio"]
         if eff < 1.6:
             changes.append(f"drop   {q}: claim {c} -> (effective {eff})")
-            continue
+            del claims[q]
         # DOWNWARD only: the engine getting faster re-anchors the
         # claim; a claim drifting UP is either contention (the
         # re-measure gate handles it) or a real regression (which
         # must red the gate and be investigated, not silently
         # re-anchored away — that would be claim laundering).
-        if eff < c and c / eff > 1.5:
+        elif eff < c and c / eff > 1.5:
             # strip the previous tag WHEREVER it sits — hand edits
             # sometimes append prose after it, and an end-anchored
             # strip would stack a second tag instead of replacing
-            why = re.sub(r"\s*\[re-anchored.*?\]", "", why).strip()
-            why = f"{why} [re-anchored {stamp} tool: min {eff}]"
+            why = re.sub(r"\s*\[re-anchored.*?\]", "", row["why"]).strip()
+            row["why"] = f"{why} [re-anchored {stamp} tool: min {eff}]"
+            row["ratio"] = eff
             changes.append(f"anchor {q}: claim {c} -> {eff}")
-            c = eff
         elif eff > c * 1.5:
             changes.append(
                 f"KEEP   {q}: claim {c} vs effective {eff} — upward "
                 "re-anchor requires investigation, not automation"
             )
-        out_rows.append((q, c, why))
     for q, eff in sorted(effective.items()):
-        if q in existing or eff <= 2.0:
+        if q in claims or eff <= 2.0:
             continue
         why = WHYS.get(q, GENERIC_WHY) + f" [added {stamp} tool: min {eff}]"
-        out_rows.append((q, eff, why))
+        claims[q] = {"ratio": eff, "why": why}
         changes.append(f"add    {q}: claim {eff}")
+    return changes
 
-    body = "".join(f"| {q} | {c} | {w} |\n" for q, c, w in out_rows)
-    new_text = text[:start] + body + text[end:]
+
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument(
+        "artifact", nargs="?", default=os.path.join(REPO, "BENCH_DETAIL.json")
+    )
+    ap.add_argument("--dry-run", action="store_true")
+    args = ap.parse_args(argv)
+    with open(args.artifact) as fh:
+        detail = json.load(fh)
+    if not detail.get("scale_10x"):
+        raise SystemExit(f"{args.artifact} has no scale_10x tier")
+    doc = load_scale_claims(CLAIMS_PATH)
+    stamp = dt.date.fromtimestamp(os.path.getmtime(args.artifact))
+    changes = sync(doc["claims"], detail, stamp)
     for ch in changes:
         print(ch)
     if not changes:
-        print("claims table already in sync")
-    if not dry and new_text != text:
-        open(NOTES, "w").write(new_text)
-        print(f"SCALE_NOTES.md updated: {len(out_rows)} claim rows")
+        print("claims already in sync")
+    elif not args.dry_run:
+        with open(CLAIMS_PATH, "w") as fh:
+            json.dump(doc, fh, indent=1, ensure_ascii=False)
+            fh.write("\n")
+        print(f"{CLAIMS_PATH} updated: {len(doc['claims'])} claim rows")
     return 0
 
 
